@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .banding import bucket_pairs, cap_occupancy, probe_pairs
 from .text import normalize_text, portable_hash64, tokens, word_shingles
 
 
@@ -343,50 +344,17 @@ def lsh_candidates(
     fixed-width join key. Self-join happens per band key, so skew is
     bounded by the largest near-dup cluster, not by n.
 
-    ``max_bucket`` is the production skew guard the round-15 scale
-    probe showed is needed on dense corpora: candidate volume is
-    Σ_buckets c·(c-1)/2, and a corpus whose random-pair Jaccard is
-    non-negligible (tiny shared vocabulary, boilerplate/templated
-    text) grows that sum as ~n² even though every single bucket stays
-    modest (measured on the probe's x2/x4 points: 9.1k → 31.8k → 128k
-    candidate pairs for 5k → 10k → 20k docs). Buckets with occupancy
-    > max_bucket are dropped BEFORE the self-join: an over-occupied
-    band bucket is near-constant content whose pairs flood the verify
-    stage with near-zero information. Documented recall trade — pairs
-    whose ONLY shared band is an over-occupied one are lost; real
-    near-dup pairs collide in several bands and survive. Default None
-    preserves exact funnel semantics (the oracle-checked path)."""
-    keys = band_keys(k, bands)
+    ``max_bucket`` is the occupancy cap of `banding.cap_occupancy`
+    (rationale and recall trade there); default None preserves exact
+    funnel semantics (the oracle-checked path)."""
     # explode one array instead of a `bands`-way union: the signature
     # aggregate subtree appears ONCE in the plan, not `bands` times
     banded = sigs.select(
         F.col(id_col).alias("doc"),
-        F.explode(F.array(*keys)).alias("band_key"),
+        F.explode(F.array(*band_keys(k, bands))).alias("band_key"),
     )
-    if max_bucket is not None:
-        # occupancy join is on the SAME key as the self-join below, so
-        # it rides the same hash partitioning — no extra shuffle of
-        # the banded relation
-        occ = (
-            banded.groupBy("band_key")
-            .agg(F.count("*").alias("__occ"))
-            .filter(F.col("__occ") <= max_bucket)
-            .select("band_key")
-        )
-        banded = banded.join(occ, "band_key")
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b")
-        )
-        .distinct()
-    )
+    banded = cap_occupancy(banded, ["band_key"], max_bucket)
+    return bucket_pairs(banded, ["band_key"]).distinct()
 
 
 def hash_sets(hashes: DataFrame, id_col: str) -> DataFrame:
@@ -394,13 +362,18 @@ def hash_sets(hashes: DataFrame, id_col: str) -> DataFrame:
     hashes collapsed into ONE array row (round 16). This is the
     verify-stage layout: a candidate pair's intersection becomes a
     single in-row `array_intersect` (JVM hash-set, codegen) instead of
-    the old explode-join-reaggregate — which shuffled
-    Σ_cand |S(a)| exploded rows and re-aggregated them per pair, the
-    dominant term of the funnel's quadratic candidate stage (guide
-    §2.3 "shuffle keys and metadata instead of payloads": here the
-    per-doc set IS the metadata, moved once per side instead of once
-    per candidate×shingle). Array order is irrelevant: intersection
-    SIZE and set size are order-free."""
+    the old explode-join-reaggregate, which shuffled one exploded row
+    per candidate×shingle and re-aggregated them per pair. The arrays
+    are not free either: the verify joins attach them by doc id, so
+    the a-side array of every candidate still rides the second join's
+    shuffle on id_b (one array per candidate row, not one row per
+    shingle). Array order is irrelevant: intersection SIZE and set
+    size are order-free.
+
+    `hashes` must be distinct per (doc, h), as `shingle_hashes`
+    returns it: `collect_list` keeps repeats, so a duplicated hash
+    inflates `n` (while `array_intersect` counts it once) and skews
+    every score built on it."""
     return hashes.groupBy(F.col(id_col).alias("doc")).agg(
         F.collect_list("h").alias("hs"),
         F.count("*").alias("n"),
@@ -421,9 +394,15 @@ def jaccard_pairs(
     |S(a) ∩ S(b)| in-row. Identical integers to the old
     explode-join-groupBy form (both sides are distinct hash sets), so
     identical Jaccard doubles; candidates with zero overlap now score
-    0.0 instead of vanishing pre-filter — indistinguishable after the
-    positive-threshold filter. Pass a precomputed `hashes` relation to
-    share the subtree with the signature stage."""
+    0.0 instead of vanishing pre-filter, so `threshold` must be
+    positive (ValueError otherwise) or every candidate would pass.
+    Pass a precomputed `hashes` relation, distinct per (doc, h) as
+    `hash_sets` requires, to share the subtree with the signature
+    stage."""
+    if threshold <= 0:
+        raise ValueError(
+            f"jaccard_pairs: threshold must be > 0, got {threshold}"
+        )
     if hashes is None:
         hashes = shingle_hashes(shingled, id_col)
     sets = hash_sets(hashes, id_col)
@@ -483,6 +462,10 @@ def containment_pairs(
     candidate join + the shared verify joins — all on 8-byte shingle
     hashes and doc ids; document text never moves. Candidate volume is
     Σ_prefix df(h), bounded by the rare-first order, never n².
+
+    A precomputed `hashes` relation must be distinct per (doc, h), as
+    `hash_sets` requires. No threshold guard is needed: the prefix
+    join admits only pairs that share a shingle.
     """
     if hashes is None:
         hashes = shingle_hashes(shingled, id_col)
@@ -635,48 +618,27 @@ def incremental_lsh_candidates(
     join shuffles band keys only; with the state table bucketed by
     band_key, only the new batch's side moves.
 
-    ``max_bucket`` is `lsh_candidates`' round-15 occupancy guard, and
-    it matters MORE here: a band key that every daily batch touches
-    accumulates history occupancy without bound, so its per-batch
-    candidate volume (new_occ · total_occ) grows linearly per day —
-    quadratically cumulatively. The cap is on TOTAL (history + batch)
-    occupancy and affects CANDIDATE GENERATION ONLY: `new_banded` is
-    always returned complete, because the persisted LSH state must
-    stay exact for future batches (capping state rows would silently
-    change later rounds' semantics). Default None = exact semantics."""
+    ``max_bucket`` is the `banding.cap_occupancy` cap, and it matters
+    MORE here: a band key that every daily batch touches accumulates
+    history occupancy without bound, so its per-batch candidate volume
+    (new_occ · total_occ) grows linearly per day — quadratically
+    cumulatively. The cap is on TOTAL (history + batch) occupancy and
+    affects CANDIDATE GENERATION ONLY: `new_banded` is always returned
+    complete, because the persisted LSH state must stay exact for
+    future batches (capping state rows would silently change later
+    rounds' semantics). Default None = exact semantics."""
     sh = with_shingles(new_df, text_col, id_col)
     sigs = minhash_signatures(sh, id_col, k=k)
-    keys = band_keys(k, bands)
     new_banded = sigs.select(
         F.col(id_col).alias("doc"),
-        F.explode(F.array(*keys)).alias("band_key"),
+        F.explode(F.array(*band_keys(k, bands))).alias("band_key"),
     )
-    both = existing_banded.unionByName(new_banded)
-    if max_bucket is not None:
-        # filtering the history+batch side alone is sufficient (a pair
-        # needs the key on both sides) and rides the same band_key
-        # hash partitioning as the candidate join
-        occ = (
-            both.groupBy("band_key")
-            .agg(F.count("*").alias("__occ"))
-            .filter(F.col("__occ") <= max_bucket)
-            .select("band_key")
-        )
-        both = both.join(occ, "band_key")
-    n = new_banded.alias("n")
-    o = both.alias("o")
-    cands = (
-        n.join(
-            o,
-            (F.col("n.band_key") == F.col("o.band_key"))
-            & (F.col("n.doc") != F.col("o.doc")),
-        )
-        .select(
-            F.least("n.doc", "o.doc").alias("id_a"),
-            F.greatest("n.doc", "o.doc").alias("id_b"),
-        )
-        .distinct()
+    # capping the history+batch side alone suffices: a pair needs the
+    # key on both sides
+    pool = cap_occupancy(
+        existing_banded.unionByName(new_banded), ["band_key"], max_bucket
     )
+    cands = probe_pairs(new_banded, pool, ["band_key"]).distinct()
     return cands, new_banded
 
 

@@ -54,8 +54,10 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .banding import bucket_pairs, cap_occupancy, hash_bands, probe_pairs
 
 
 def gray_f64(arr: np.ndarray) -> np.ndarray:
@@ -140,6 +142,14 @@ def dhash_images(
     )
 
 
+#: the (band, key) bucket columns `banding.hash_bands` explodes
+_KEYS = ["band", "key"]
+
+
+def _hamming(a: str, b: str) -> Column:
+    return F.bit_count(F.col(a).bitwiseXOR(F.col(b))).cast("int")
+
+
 def phash_near_dup(
     hashes: DataFrame,
     id_col: str = "media_id",
@@ -149,10 +159,10 @@ def phash_near_dup(
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-duplicate image pairs from 64-bit perceptual hashes:
-    explode each hash into `bands` 16-bit band keys (arithmetic shift
-    + mask — identical bits in any engine), self-join on (band, key)
-    with id_a < id_b, distinct, then verify Hamming ≤ `max_hamming`
-    via codegen `bit_count(xor)`. Returns (id_a, id_b, hamming).
+    explode each hash into `bands` 16-bit band keys
+    (`banding.hash_bands`), self-join on (band, key) with id_a < id_b,
+    distinct, then verify Hamming ≤ `max_hamming` via codegen
+    `bit_count(xor)`. Returns (id_a, id_b, hamming).
 
     Never all-pairs: both sides shuffle 8-byte keys only, candidate
     volume is bucket-bounded (the q80 'neardup' discipline). Recall:
@@ -160,61 +170,19 @@ def phash_near_dup(
     (pigeonhole — some band has no flipped bit); above that, only if
     the flips cluster inside few bands.
 
-    ``max_bucket`` (round 15): the occupancy guard of
-    `dedup.lsh_candidates`, and here the quadratic term is STRUCTURAL,
-    not corpus-dependent — the band key space is fixed at 2^16, so
-    per-bucket occupancy grows ∝ n/65536 no matter what, and Σc² has
-    an n²/(bands·2^16) floor (at 10⁸ images that is ~10¹¹ candidate
-    pairs). Buckets with occupancy > max_bucket (flat-color frames,
-    logo cards, test patterns — the image analog of boilerplate) are
-    dropped before the self-join; default None keeps exact
-    semantics."""
-    assert 64 % bands == 0, "bands must divide 64"
-    width = 64 // bands
-    mask = (1 << width) - 1
-    h = F.col(hash_col)
-    banded = hashes.select(
-        F.col(id_col).alias("doc"),
-        h.alias("__h"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftright(h, i * width)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("key"),
-                )
-                for i in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("doc", "__h", "bk.band", "bk.key")
-    if max_bucket is not None:
-        occ = (
-            banded.groupBy("band", "key")
-            .agg(F.count("*").alias("__occ"))
-            .filter(F.col("__occ") <= max_bucket)
-            .select("band", "key")
-        )
-        banded = banded.join(occ, ["band", "key"])
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.col("a.__h").alias("__ha"),
-            F.col("b.__h").alias("__hb"),
-        )
-        .distinct()
+    ``max_bucket``: the `banding.cap_occupancy` cap. Here the
+    quadratic term is STRUCTURAL, not corpus-dependent — the band key
+    space is fixed at 2^16, so per-bucket occupancy grows ∝ n/65536 no
+    matter what, and Σc² has an n²/(bands·2^16) floor (at 10⁸ images
+    that is ~10¹¹ candidate pairs); flat-color frames, logo cards and
+    test patterns are the image analog of boilerplate. Default None
+    keeps exact semantics."""
+    banded = cap_occupancy(
+        hash_bands(hashes, id_col, hash_col, bands), _KEYS, max_bucket
     )
-    ham = F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb")))
+    cand = bucket_pairs(banded, _KEYS, ["h"]).distinct()
     return (
-        cand.withColumn("hamming", ham.cast("int"))
+        cand.withColumn("hamming", _hamming("h_a", "h_b"))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
@@ -248,49 +216,23 @@ def incremental_phash_candidates(
     scan projection — with the state bucketed by dhash prefix the
     probe prunes). Verify is codegen bit_count(xor).
 
-    ``max_bucket`` (round 15): total-occupancy cap as in
+    ``max_bucket``: the `banding.cap_occupancy` cap on total
+    (history + batch) occupancy, as in
     `dedup.incremental_lsh_candidates` — a 16-bit band key the crawl
     keeps hitting (flat frames, logo cards) accumulates history
     occupancy without bound. Candidate generation only; `new_rows` is
     always returned complete (persisted state must stay exact)."""
-    assert 64 % bands == 0, "bands must divide 64"
-    width = 64 // bands
-
-    def banded(df: DataFrame, idc: str, hc: str) -> DataFrame:
-        h = F.col(hc)
-        return df.select(
-            F.col(idc).alias("doc"),
-            h.alias("__h"),
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(h, i * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("key"),
-                    )
-                    for i in range(bands)
-                ])
-            ).alias("bk"),
-        ).select("doc", "__h", "bk.band", "bk.key")
-
     new_rows = new_hashes.select(
         F.col(id_col).alias("doc"), F.col(hash_col).alias("dhash")
     )
-    nb = banded(new_hashes, id_col, hash_col)
-    pool = banded(state, "doc", "dhash").unionByName(
-        banded(new_rows, "doc", "dhash")
+    nb = hash_bands(new_rows, "doc", "dhash", bands)
+    # capping the pool side alone suffices: every pair (history AND
+    # in-batch) needs a pool row on the over-occupied key
+    pool = cap_occupancy(
+        hash_bands(state, "doc", "dhash", bands).unionByName(nb),
+        _KEYS,
+        max_bucket,
     )
-    if max_bucket is not None:
-        # filtering the pool side alone suffices: every pair (history
-        # AND in-batch) needs a pool row on the over-occupied key
-        occ = (
-            pool.groupBy("band", "key")
-            .agg(F.count("*").alias("__occ"))
-            .filter(F.col("__occ") <= max_bucket)
-            .select("band", "key")
-        )
-        pool = pool.join(occ, ["band", "key"])
     # hamming BEFORE distinct: a within-batch pair appears in both
     # join orderings (n=a,p=b and n=b,p=a), so a distinct spanning the
     # side-tagged hash columns kept BOTH — one duplicate row per
@@ -299,20 +241,9 @@ def incremental_phash_candidates(
     # round-10 q94 'dincr' driver branch — the pytest replays only
     # used exact twins (hamming 0 ⇒ equal hashes ⇒ orderings already
     # identical), exactly the blind spot a value-hash oracle closes.
-    ham = F.bit_count(F.col("p.__h").bitwiseXOR(F.col("n.__h")))
     pairs = (
-        pool.alias("p")
-        .join(
-            F.broadcast(nb.alias("n")),
-            (F.col("p.band") == F.col("n.band"))
-            & (F.col("p.key") == F.col("n.key"))
-            & (F.col("p.doc") != F.col("n.doc")),
-        )
-        .select(
-            F.least("p.doc", "n.doc").alias("id_a"),
-            F.greatest("p.doc", "n.doc").alias("id_b"),
-            ham.cast("int").alias("hamming"),
-        )
+        probe_pairs(F.broadcast(nb), pool, _KEYS, ["h"])
+        .select("id_a", "id_b", _hamming("h_n", "h_p").alias("hamming"))
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
     )
@@ -421,14 +352,11 @@ def video_near_dup(
     shuffle (8-byte key, frame) rows only; payloads never move; the
     offset histogram is one groupBy over verified collisions.
 
-    ``max_bucket`` (round 15): occupancy cap over (band, key) frame
-    rows — the cross-VIDEO analog of what `collapse_runs` already
-    removes within a video (a band value shared by thousands of
-    different clips' frames — black frames, slates — pairs them all);
-    default None keeps exact semantics."""
-    assert 64 % bands == 0, "bands must divide 64"
-    width = 64 // bands
-    mask = (1 << width) - 1
+    ``max_bucket``: the `banding.cap_occupancy` cap over (band, key)
+    frame rows — the cross-VIDEO analog of what `collapse_runs`
+    already removes within a video (a band value shared by thousands
+    of different clips' frames — black frames, slates — pairs them
+    all); default None keeps exact semantics."""
     base = frame_hashes.select(
         F.col(id_col).alias("doc"),
         F.col(frame_col).alias("__f"),
@@ -444,54 +372,14 @@ def video_near_dup(
             )
             .drop("__prev")
         )
-    h = F.col("__h")
-    banded = base.select(
-        "doc",
-        "__f",
-        "__h",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftright(h, i * width)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("key"),
-                )
-                for i in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("doc", "__f", "__h", "bk.band", "bk.key")
-    if max_bucket is not None:
-        occ = (
-            banded.groupBy("band", "key")
-            .agg(F.count("*").alias("__occ"))
-            .filter(F.col("__occ") <= max_bucket)
-            .select("band", "key")
-        )
-        banded = banded.join(occ, ["band", "key"])
-    a, b = banded.alias("a"), banded.alias("b")
-    frame_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.col("a.__f").alias("__fa"),
-            F.col("b.__f").alias("__fb"),
-            F.col("a.__h").alias("__ha"),
-            F.col("b.__h").alias("__hb"),
-        )
-        .distinct()
+    banded = cap_occupancy(
+        hash_bands(base, "doc", "__h", bands, ["__f"]), _KEYS, max_bucket
     )
-    ham = F.bit_count(F.col("__ha").bitwiseXOR(F.col("__hb")))
+    frame_pairs = bucket_pairs(banded, _KEYS, ["__f", "h"]).distinct()
     by_offset = (
-        frame_pairs.filter(ham <= max_hamming)
+        frame_pairs.filter(_hamming("h_a", "h_b") <= max_hamming)
         .groupBy(
-            "id_a", "id_b", (F.col("__fa") - F.col("__fb")).alias("offset")
+            "id_a", "id_b", (F.col("__f_a") - F.col("__f_b")).alias("offset")
         )
         .agg(F.count("*").alias("n_match"))
     )

@@ -29,6 +29,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .banding import bucket_pairs, cap_occupancy
 
 
 #: quantization scale: embedding floats become exact micro-integers via
@@ -1243,49 +1244,40 @@ def lsh_near_dup(
     Norms are computed once per vector BEFORE the explode; the
     per-candidate cost is exactly one zip_with dot.
 
-    ``max_bucket`` (round 15): the same production occupancy guard as
-    `dedup.lsh_candidates` — the ~tables·n²/2^planes expectation above
-    is QUADRATIC, and the scale probe measured q80's 'neardup' branch
-    at growth exponent ~1.5 on the x2/x4 points because of it. Tables
+    ``max_bucket``: the `banding.cap_occupancy` cap, applied once
+    before the self-join. The ~tables·n²/2^planes expectation above is
+    QUADRATIC, and the scale probe measured q80's 'neardup' branch at
+    growth exponent ~1.5 on the x2/x4 points because of it; tables
     whose bucket holds > max_bucket vectors are near-constant regions
-    of the sphere (or a skewed cluster); dropping them before the
-    bucket join caps per-bucket work at max_bucket² with the
-    documented recall trade. Default None = exact documented
-    semantics (the oracle-checked path); at scale, raise `planes`
-    AND set a cap."""
-    cos = int_dot(F.col("q_iv"), F.col("d_iv")).cast("double") / (
-        F.col("q_nrm") * F.col("d_nrm")
-    )
-    # round 16: band ONCE and self-join two renamed views of the same
-    # checkpointed frame. The old two independent `_banded(data, ...)`
-    # trees differed only in column aliases, so the planner could not
-    # reuse them and the whole quantize+norm+planes·tables-plane-dot
-    # pass ran twice over the corpus. The checkpoint is a few
-    # fixed-width columns × tables rows per vector — the q71 weights
-    # boundary discipline.
-    banded = _banded(
-        data, id_col, vec_col, "q", planes, tables, dims
-    ).localCheckpoint()
-    qb = banded
-    db = banded.select(
-        F.col("q_id").alias("d_id"),
-        F.col("q_iv").alias("d_iv"),
-        F.col("q_nrm").alias("d_nrm"),
-        "bucket",
-    )
-    if max_bucket is not None:
-        occ = (
-            qb.groupBy("bucket")
-            .agg(F.count("*").alias("__occ"))
-            .filter(F.col("__occ") <= max_bucket)
-            .select("bucket")
+    of the sphere (or a skewed cluster). Default None = exact
+    documented semantics (the oracle-checked path); at scale, raise
+    `planes` AND set a cap."""
+    # band ONCE and self-join the checkpointed frame: two `_banded`
+    # trees differing only in column aliases cannot be reused by the
+    # planner, so the quantize+norm+plane-dot pass would run twice over
+    # the corpus. The checkpoint is a few fixed-width columns × tables
+    # rows per vector — the q71 weights boundary discipline.
+    banded = (
+        _banded(data, id_col, vec_col, "q", planes, tables, dims)
+        .select(
+            F.col("q_id").alias("doc"),
+            F.col("q_iv").alias("iv"),
+            F.col("q_nrm").alias("nrm"),
+            "bucket",
         )
-        qb = qb.join(occ, "bucket")
-        db = db.join(occ, "bucket")
+        .localCheckpoint()
+    )
+    banded = cap_occupancy(banded, ["bucket"], max_bucket)
+    cos = int_dot(F.col("iv_a"), F.col("iv_b")).cast("double") / (
+        F.col("nrm_a") * F.col("nrm_b")
+    )
     return (
-        qb.join(db, ["bucket"])
-        .filter(F.col("q_id") < F.col("d_id"))
-        .select("q_id", "d_id", cos.alias("cosine"))
+        bucket_pairs(banded, ["bucket"], ["iv", "nrm"])
+        .select(
+            F.col("id_a").alias("q_id"),
+            F.col("id_b").alias("d_id"),
+            cos.alias("cosine"),
+        )
         .filter(F.col("cosine") >= threshold)
         .dropDuplicates(["q_id", "d_id"])
     )

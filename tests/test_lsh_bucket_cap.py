@@ -9,9 +9,16 @@ production LSH skew cap, with an explicit recall trade. Default None
 must keep the exact (oracle-checked) semantics.
 """
 
+import re
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
-from bigdatabowl2024_25_spark.operators.dedup import lsh_candidates
+from bigdatabowl2024_25_spark.operators.dedup import (
+    jaccard_pairs,
+    lsh_candidates,
+)
 from bigdatabowl2024_25_spark.operators.similarity import lsh_near_dup
 from bigdatabowl2024_25_spark.sources.io import literal_df
 
@@ -165,3 +172,36 @@ def test_video_cap_drops_only_mega_bucket_pairs(spark):
     capped = video_near_dup(fh, min_matching_frames=1, max_bucket=5)
     got = {(r.id_a, r.id_b, r.offset, r.n_match) for r in capped.collect()}
     assert got == {(100, 101, 0, 2)}
+
+
+_PKG = Path(__file__).resolve().parent.parent / "bigdatabowl2024_25_spark"
+
+#: the steps every bucket funnel shares, each of which must have ONE
+#: implementation (`operators/banding.py`): the occupancy cap, the
+#: bucket self-join, the new x pool probe and the dhash band explode
+_BANDING_STEPS = {
+    "occupancy cap": r'"__occ"',
+    "bucket self-join": r'\.doc"\)\s*<\s*F\.col\("\w+\.doc"\)',
+    "incremental probe": r'\.doc"\)\s*!=\s*F\.col\("\w+\.doc"\)',
+    "hash band explode": r'\.alias\("band"\)',
+}
+
+
+@pytest.mark.parametrize("step", sorted(_BANDING_STEPS))
+def test_banding_steps_live_only_in_banding_module(step):
+    """A seventh hand-written copy of a funnel step fails here: build
+    it from `operators.banding` instead. Source grep, no Spark."""
+    pattern = re.compile(_BANDING_STEPS[step])
+    homes = sorted(
+        str(p.relative_to(_PKG))
+        for p in _PKG.rglob("*.py")
+        if pattern.search(p.read_text())
+    )
+    assert homes == ["operators/banding.py"], (step, homes)
+
+
+def test_jaccard_pairs_rejects_zero_threshold():
+    """Zero-overlap candidates score 0.0, so threshold 0 would pass
+    every candidate; the guard fires before any plan is built."""
+    with pytest.raises(ValueError, match="threshold must be > 0"):
+        jaccard_pairs(None, None, "doc_id", threshold=0)
